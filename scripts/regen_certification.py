@@ -154,16 +154,19 @@ def render_md(order: list[str], queries: dict, current_fp: dict[str, str],
         f"| query | certified (rounds) | fingerprint | changed | r{new_round} window |",
         "|---|---|---|---|---|",
     ]
-    n_changed = 0
+    n_changed = n_debt = n_wait = 0
     for i, n in enumerate(order):
         rec = queries.get(n, {})
         rounds = rec.get("certified_rounds", [])
         certs = ", ".join(f"r{r}" for r in rounds) if rounds else "— (never)"
         changed = bool(rounds) and rec.get("fingerprint") != current_fp.get(n)
+        requested = requested_refresh(n, rec)
         n_changed += changed
-        flag = "yes" if changed else (
-            "requested" if requested_refresh(n, rec) else ""
-        )
+        # never-certified, changed or requested: owed a certification seat
+        if not rounds or changed or requested:
+            n_debt += 1
+            n_wait += i >= WINDOW
+        flag = "yes" if changed else ("requested" if requested else "")
         lines.append(
             f"| {n} | {certs} | {current_fp.get(n, '?')} |"
             f" {flag} | {'yes' if i < WINDOW else ''} |"
@@ -181,10 +184,20 @@ def render_md(order: list[str], queries: dict, current_fp: dict[str, str],
         f"at least once; {len(order) - ever} pending first certification;",
         f"{n_changed} changed since their last certification and {n_req} with",
         "an externally-requested refresh seat (scripts/regen_certification.py",
-        f"REQUESTED_REFRESH) — all in the r{new_round} window, which holds the",
-        f"{WINDOW} highest-priority seats.",
-        "",
     ]
+    if n_wait:
+        # more debt than seats: the window is the highest-priority slice of it
+        lines += [
+            f"REQUESTED_REFRESH). The r{new_round} window holds the {WINDOW}"
+            f" highest-priority of these {n_debt}",
+            f"queries; {n_wait} wait for a later window.",
+        ]
+    else:
+        lines += [
+            f"REQUESTED_REFRESH) — all in the r{new_round} window, which holds the",
+            f"{WINDOW} highest-priority seats.",
+        ]
+    lines.append("")
     return "\n".join(lines)
 
 
@@ -219,11 +232,6 @@ def main() -> None:
     with open(os.path.join(REPO, "CERTIFICATION.md"), "w") as f:
         f.write(md)
     order = ledger["registry_order"]
-    changed = [
-        n for n in order
-        if ledger["queries"].get(n, {}).get("certified_rounds")
-        and ledger["queries"][n].get("fingerprint") is not None
-    ]
     print(f"wrote CERTIFICATION.json + CERTIFICATION.md: {len(order)} queries; "
           f"window head: {order[:8]} ...")
 
