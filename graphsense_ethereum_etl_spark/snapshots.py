@@ -257,8 +257,11 @@ class SnapshotCatalog:
         ``max(CASE WHEN ts_col <= t THEN height END)`` is exactly the
         filtered max, including the NULL-when-empty contract). Raises
         FileNotFoundError naming the first timestamp with no block
-        at-or-before it."""
-        ts_list = list(ts_list)
+        at-or-before it. An empty ``ts_list`` gives ``{}``; a repeated
+        timestamp is resolved once."""
+        ts_list = list(dict.fromkeys(ts_list))
+        if not ts_list:
+            return {}
         blk = self.read(block_table)
         row = blk.agg(
             *[

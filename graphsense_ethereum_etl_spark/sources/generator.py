@@ -46,8 +46,10 @@ def gen_blocks(spark: SparkSession, start: int, end: int, partitions: int = 8) -
         _hex64(F.lit("stroot"), n).alias("state_root"),
         _hex64(F.lit("rcroot"), n).alias("receipts_root"),
         _hex40(F.lit("miner"), (n % 10)).alias("miner"),
-        (n * 1000 + 7).cast(WEI_DECIMAL).alias("difficulty"),
-        (n * n * 500).cast(WEI_DECIMAL).alias("total_difficulty"),
+        # wei-scale values are computed in WEI_DECIMAL: bigint arithmetic
+        # overflows (n * n * 500 past block ~135.8 M)
+        (n.cast(WEI_DECIMAL) * 1000 + 7).cast(WEI_DECIMAL).alias("difficulty"),
+        (n.cast(WEI_DECIMAL) * n * 500).cast(WEI_DECIMAL).alias("total_difficulty"),
         (500 + n % 1000).cast("int").alias("size"),
         F.lit("0x").alias("extra_data"),
         F.lit(30_000_000).cast("int").alias("gas_limit"),
@@ -85,7 +87,10 @@ def gen_transactions(spark: SparkSession, start: int, end: int, partitions: int 
         F.when((n + i) % 7 != 0, _hex40(F.lit("addr"), (n * 13 + i) % 50)).alias(
             "to_address"
         ),
-        ((n + 1) * 10_000_000_000_000 + i).cast(WEI_DECIMAL).alias("value"),
+        # in WEI_DECIMAL: in bigint this overflows past block 922,336
+        ((n + 1).cast(WEI_DECIMAL) * 10_000_000_000_000 + i)
+        .cast(WEI_DECIMAL)
+        .alias("value"),
         F.lit(21000).cast("int").alias("gas"),
         ((n % 50 + 1) * 1_000_000_000).cast(WEI_DECIMAL).alias("gas_price"),
         F.when((n + i) % 3 == 0, F.concat(F.lit("0xa9059cbb"), F.md5(i.cast("string"))))

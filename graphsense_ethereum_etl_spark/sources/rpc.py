@@ -4,9 +4,11 @@ The reference pulls blocks/txs/receipts/logs/traces from an Ethereum node via
 batched JSON-RPC with a 5-thread pool (eth_cassandra_streaming.py:99-180).
 The Spark shape: distribute the *block-id range* across executors
 (``spark.range`` → ``repartition``), then each task fetches its contiguous
-id-batch with batched RPC inside ``mapInPandas`` (Arrow batches out). Task
-parallelism replaces the thread pool; at 1000 executors this scales the
-extraction linearly while keeping each RPC batch bounded.
+id-batch with batched RPC inside ``mapInArrow`` (``fetch_chain``: every
+entity of a batch in one Python stage; ``fetch_entity``, ``mapInPandas``,
+for a single-entity fetch). Task parallelism replaces the thread pool; at
+1000 executors this scales the extraction linearly while keeping each RPC
+batch bounded.
 
 Transport: ``JsonRpcTransport`` speaks the actual wire protocol — JSON-RPC
 2.0 *batch* POSTs (one HTTP round-trip per ``rpc_batch_size`` blocks, the
@@ -28,9 +30,12 @@ from decimal import Decimal
 from typing import Any
 
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_schema
 
-from ..schemas import RAW_BLOCK
+from ..schemas import RAW_BLOCK, RAW_LOG, RAW_RECEIPT, RAW_TRACE, RAW_TRANSACTION
 
 BatchFetcher = Callable[[list[int]], list[dict[str, Any]]]
 
@@ -216,77 +221,158 @@ def rpc_block_fetcher(transport: JsonRpcTransport) -> BatchFetcher:
     return fetch
 
 
-def rpc_transaction_fetcher(transport: JsonRpcTransport) -> BatchFetcher:
-    """S1 transactions: same eth_getBlockByNumber batch, exploding the full
-    tx objects (block timestamp attached from the enclosing block, matching
-    the reference's enrichment input shape)."""
-
-    def fetch(block_ids: list[int]) -> list[dict[str, Any]]:
-        calls = [("eth_getBlockByNumber", [hex(b), True]) for b in block_ids]
-        out: list[dict[str, Any]] = []
-        for blk in transport.request_batch(calls):
-            ts = _hx(blk.get("timestamp"))
-            out.extend(
-                raw_transaction_from_rpc(tx, ts)
-                for tx in blk.get("transactions", [])
-                if isinstance(tx, dict)
-            )
-        return out
-
-    return fetch
-
-
-def rpc_receipt_fetcher(transport: JsonRpcTransport) -> BatchFetcher:
-    """S2 receipts: eth_getBlockReceipts per block id, batched — one call
-    per BLOCK rather than per transaction (the modern replacement for the
-    reference's per-tx eth_getTransactionReceipt fan-out)."""
-
-    def fetch(block_ids: list[int]) -> list[dict[str, Any]]:
-        calls = [("eth_getBlockReceipts", [hex(b)]) for b in block_ids]
-        out: list[dict[str, Any]] = []
-        for receipts in transport.request_batch(calls):
-            out.extend(raw_receipt_from_rpc(r) for r in receipts or [])
-        return out
-
-    return fetch
-
-
-def rpc_log_fetcher(transport: JsonRpcTransport) -> BatchFetcher:
-    """S2 logs: receipt-embedded log objects from the same
-    eth_getBlockReceipts batch."""
-
-    def fetch(block_ids: list[int]) -> list[dict[str, Any]]:
-        calls = [("eth_getBlockReceipts", [hex(b)]) for b in block_ids]
-        out: list[dict[str, Any]] = []
-        for receipts in transport.request_batch(calls):
-            for r in receipts or []:
-                out.extend(raw_log_from_rpc(lg) for lg in r.get("logs", []))
-        return out
-
-    return fetch
+def _decode_chain(
+    transport: JsonRpcTransport, block_ids: list[int]
+) -> dict[str, list[dict[str, Any]]]:
+    """Every raw entity of ``block_ids`` from ONE batched POST per method:
+    eth_getBlockByNumber (full tx objects) yields the blocks and their
+    transactions (block timestamp attached, the reference's enrichment
+    input shape); eth_getBlockReceipts (one call per BLOCK, the modern
+    replacement for the reference's per-tx eth_getTransactionReceipt
+    fan-out) yields the receipts and their embedded logs; trace_block
+    yields the traces, trace_index enumerating within each block (the
+    reference's ordering contract)."""
+    hexes = [hex(b) for b in block_ids]
+    blocks = transport.request_batch(
+        [("eth_getBlockByNumber", [h, True]) for h in hexes]
+    )
+    receipts = [
+        r
+        for rs in transport.request_batch(
+            [("eth_getBlockReceipts", [h]) for h in hexes]
+        )
+        for r in rs or []
+    ]
+    traces = transport.request_batch([("trace_block", [h]) for h in hexes])
+    return {
+        "blocks": [raw_block_from_rpc(b) for b in blocks],
+        "transactions": [
+            raw_transaction_from_rpc(tx, _hx(b.get("timestamp")))
+            for b in blocks
+            for tx in b.get("transactions", [])
+            if isinstance(tx, dict)
+        ],
+        "receipts": [raw_receipt_from_rpc(r) for r in receipts],
+        "logs": [
+            raw_log_from_rpc(lg) for r in receipts for lg in r.get("logs", [])
+        ],
+        "traces": [
+            raw_trace_from_rpc(t, i)
+            for ts in traces
+            for i, t in enumerate(ts or [])
+        ],
+    }
 
 
-def rpc_trace_fetcher(transport: JsonRpcTransport) -> BatchFetcher:
-    """S3 traces: trace_block per block id, batched; trace_index enumerates
-    within each block (the reference's ordering contract)."""
-
-    def fetch(block_ids: list[int]) -> list[dict[str, Any]]:
-        calls = [("trace_block", [hex(b)]) for b in block_ids]
-        out: list[dict[str, Any]] = []
-        for traces in transport.request_batch(calls):
-            out.extend(
-                raw_trace_from_rpc(t, i) for i, t in enumerate(traces or [])
-            )
-        return out
-
-    return fetch
+# The raw entity frames of a chain batch, by ChainSource key.
+CHAIN_ENTITIES: dict[str, T.StructType] = {
+    "blocks": RAW_BLOCK,
+    "transactions": RAW_TRANSACTION,
+    "receipts": RAW_RECEIPT,
+    "logs": RAW_LOG,
+    "traces": RAW_TRACE,
+}
 
 
-def default_rpc_fetcher(provider_uri: str) -> BatchFetcher:
-    """Real-node fetcher: stdlib-HTTP JSON-RPC batch transport. Needs a
-    reachable node at ``provider_uri`` (none in this harness — tests inject
-    a recorded ``post``)."""
-    return rpc_block_fetcher(JsonRpcTransport(provider_uri))
+def _wire_type(dt: T.DataType) -> T.DataType:
+    """Integers at bigint width: the fetch stores what the node sent, and
+    only a consumed entity frame narrows it to its RAW_* type (and fails
+    there on an out-of-range value, as a per-entity fetch did)."""
+    if isinstance(dt, (T.IntegerType, T.ShortType)):
+        return T.LongType()
+    if isinstance(dt, T.ArrayType):
+        return T.ArrayType(_wire_type(dt.elementType), dt.containsNull)
+    return dt
+
+
+# The fetch's output: one row per decoded record, ``kind`` naming its
+# ChainSource key and the struct column of that name holding it (the other
+# structs are null).
+CHAIN_ENVELOPE = T.StructType(
+    [T.StructField("kind", T.StringType())]
+    + [
+        T.StructField(
+            kind,
+            T.StructType(
+                [T.StructField(f.name, _wire_type(f.dataType)) for f in schema]
+            ),
+        )
+        for kind, schema in CHAIN_ENTITIES.items()
+    ]
+)
+
+# Per entity: the envelope projection back to its RAW_* schema.
+_ENTITY_EXPRS: dict[str, list[str]] = {
+    kind: [
+        f"CAST(`{kind}`.`{f.name}` AS {f.dataType.simpleString()}) AS `{f.name}`"
+        for f in schema
+    ]
+    for kind, schema in CHAIN_ENTITIES.items()
+}
+
+
+def _envelope_batch(
+    schema: pa.Schema, kind: str, records: list[dict[str, Any]]
+) -> pa.RecordBatch:
+    n = len(records)
+    cols = [pa.array([kind] * n, pa.string())] + [
+        pa.array(records, f.type) if f.name == kind else pa.nulls(n, f.type)
+        for f in list(schema)[1:]
+    ]
+    return pa.RecordBatch.from_arrays(cols, schema=schema)
+
+
+def _id_range(
+    spark: SparkSession, start_block: int, end_block: int, tasks: int | None
+) -> DataFrame:
+    n_ids = end_block - start_block + 1
+    if tasks is None:
+        tasks = max(1, min(spark.sparkContext.defaultParallelism, n_ids))
+    return spark.range(start_block, end_block + 1, 1, tasks)
+
+
+def fetch_chain(
+    spark: SparkSession,
+    start_block: int,
+    end_block: int,
+    transport: JsonRpcTransport,
+    rpc_batch_size: int = 50,
+    tasks: int | None = None,
+) -> DataFrame:
+    """Distributed extraction of every entity of [start_block, end_block]
+    in ONE Python stage: each task fetches its ids in ``rpc_batch_size``
+    chunks, one POST per method per chunk (``_decode_chain``), and emits
+    ``CHAIN_ENVELOPE`` Arrow batches."""
+    arrow_schema = to_arrow_schema(CHAIN_ENVELOPE)
+
+    def fetch_partition(
+        batches: Iterator[pa.RecordBatch],
+    ) -> Iterator[pa.RecordBatch]:
+        for rb in batches:
+            block_ids = rb.column("id").to_pylist()
+            for lo in range(0, len(block_ids), rpc_batch_size):
+                chunk = block_ids[lo : lo + rpc_batch_size]
+                for kind, records in _decode_chain(transport, chunk).items():
+                    if records:
+                        yield _envelope_batch(arrow_schema, kind, records)
+
+    return _id_range(spark, start_block, end_block, tasks).mapInArrow(
+        fetch_partition, CHAIN_ENVELOPE
+    )
+
+
+class ChainBatch(dict):
+    """A chain source's batch, ``{entity: DataFrame}``, whose frames all
+    read one persisted fetch. ``release()`` unpersists it;
+    ``transform_and_write_batch`` calls it when the batch returns, and a
+    caller that reads the frames any other way calls it when done."""
+
+    def __init__(self, frames: dict[str, DataFrame], fetched: DataFrame):
+        super().__init__(frames)
+        self._fetched = fetched
+
+    def release(self) -> None:
+        self._fetched.unpersist()
 
 
 def fetch_entity(
@@ -302,10 +388,7 @@ def fetch_entity(
     fetch each task's ids in ``rpc_batch_size`` chunks (mirroring the
     reference's batch_size=50, eth_cassandra_streaming.py:586), emit Arrow
     batches with the given raw-entity schema."""
-    n_ids = end_block - start_block + 1
-    if tasks is None:
-        tasks = max(1, min(spark.sparkContext.defaultParallelism, n_ids))
-    ids = spark.range(start_block, end_block + 1, 1, tasks)
+    ids = _id_range(spark, start_block, end_block, tasks)
     fields = [f.name for f in schema.fields]
 
     def fetch_partition(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -391,8 +474,6 @@ def genesis_traces(
     (address, value_wei) in block 0 — the pre-mine state trace_block can
     never return. The mainnet allocation list ships with any client's
     genesis.json; callers supply it (or a test fixture)."""
-    from ..schemas import RAW_TRACE
-
     rows = _synthetic_trace_rows(
         GENESIS_BLOCK, "genesis", [(None, addr, wei) for addr, wei in allocations]
     )
@@ -408,8 +489,6 @@ def daofork_traces(
     account (address, balance_wei) moving its balance into the WithdrawDAO
     refund contract at block 1,920,000 — irregular state changes with no
     transactions, invisible to trace_block."""
-    from ..schemas import RAW_TRACE
-
     rows = _synthetic_trace_rows(
         DAOFORK_BLOCK,
         "daofork",
@@ -427,9 +506,12 @@ def rpc_chain_source(
     """ChainSource over a live transport: ``(spark, lo, hi) -> {entity:
     DataFrame}`` — plug directly into ``run_incremental`` to ingest a real
     chain with the same micro-batch/resume/marker semantics the synthetic
-    generator exercises. Each entity is its own distributed fetch (blocks +
-    transactions share the eth_getBlockByNumber batch; receipts + logs share
-    eth_getBlockReceipts; traces use trace_block).
+    generator exercises. A batch is ONE distributed fetch (``fetch_chain``:
+    one POST per method per ``rpc_batch_size`` chunk, the reference's
+    per-batch shape, eth_cassandra_streaming.py:622-626), persisted and
+    returned as a ``ChainBatch`` whose entity frames each select their
+    ``kind`` from it, so every answer is fetched once however many writes
+    and hooks read the batch. ``transform_and_write_batch`` releases it.
 
     When ``genesis_allocations`` / ``daofork_balances`` are provided, the
     trace frame for a batch covering block 0 / block 1,920,000 additionally
@@ -437,31 +519,22 @@ def rpc_chain_source(
     include_genesis_traces/include_daofork_traces are both True in the
     reference's ingest, so a from-genesis backfill without these rows would
     silently lack every pre-mine allocation and the DAO refund moves)."""
-    from ..schemas import RAW_LOG, RAW_RECEIPT, RAW_TRACE, RAW_TRANSACTION
 
-    def source(spark: SparkSession, lo: int, hi: int) -> dict[str, DataFrame]:
-        traces = fetch_entity(
-            spark, lo, hi, rpc_trace_fetcher(transport), RAW_TRACE, rpc_batch_size
-        )
-        if genesis_allocations and lo <= GENESIS_BLOCK <= hi:
-            traces = genesis_traces(spark, genesis_allocations).unionByName(traces)
-        if daofork_balances and lo <= DAOFORK_BLOCK <= hi:
-            traces = traces.unionByName(daofork_traces(spark, daofork_balances))
-        return {
-            "blocks": fetch_entity(
-                spark, lo, hi, rpc_block_fetcher(transport), RAW_BLOCK, rpc_batch_size
-            ),
-            "transactions": fetch_entity(
-                spark, lo, hi, rpc_transaction_fetcher(transport), RAW_TRANSACTION, rpc_batch_size
-            ),
-            "receipts": fetch_entity(
-                spark, lo, hi, rpc_receipt_fetcher(transport), RAW_RECEIPT, rpc_batch_size
-            ),
-            "logs": fetch_entity(
-                spark, lo, hi, rpc_log_fetcher(transport), RAW_LOG, rpc_batch_size
-            ),
-            "traces": traces,
+    def source(spark: SparkSession, lo: int, hi: int) -> ChainBatch:
+        fetched = fetch_chain(spark, lo, hi, transport, rpc_batch_size).persist()
+        frames = {
+            kind: fetched.where(f"kind = '{kind}'").selectExpr(*exprs)
+            for kind, exprs in _ENTITY_EXPRS.items()
         }
+        if genesis_allocations and lo <= GENESIS_BLOCK <= hi:
+            frames["traces"] = genesis_traces(
+                spark, genesis_allocations
+            ).unionByName(frames["traces"])
+        if daofork_balances and lo <= DAOFORK_BLOCK <= hi:
+            frames["traces"] = frames["traces"].unionByName(
+                daofork_traces(spark, daofork_balances)
+            )
+        return ChainBatch(frames, fetched)
 
     return source
 

@@ -143,6 +143,102 @@ def test_generator_edge_shapes(spark):
     assert logs.filter("topics IS NULL").count() > 0 or logs.count() >= 0
 
 
+def test_generator_wei_values_past_bigint_range(spark):
+    """Wei-scale generator values are computed in DECIMAL(38,0): in bigint,
+    a transaction value overflowed past block 922,336 (ARITHMETIC_OVERFLOW
+    on collect) and the total difficulty past about 135.8 M."""
+    from decimal import Decimal
+
+    from graphsense_ethereum_etl_spark.sources.generator import gen_blocks
+
+    chain = gen_chain(spark, 1_000_000, 1_000_001, partitions=1)
+    blocks = {r["number"]: r for r in chain["blocks"].collect()}
+    for n in (1_000_000, 1_000_001):
+        assert blocks[n]["difficulty"] == Decimal(n * 1000 + 7)
+        assert blocks[n]["total_difficulty"] == Decimal(n * n * 500)
+    [tx] = chain["transactions"].collect()  # block 1,000,000 is empty
+    assert (tx["block_number"], tx["transaction_index"]) == (1_000_001, 0)
+    assert tx["value"] == Decimal(1_000_002 * 10**13)
+    assert chain["receipts"].count() == 1
+    traces = {r["trace_type"]: r["value"] for r in chain["traces"].collect()
+              if r["block_number"] == 1_000_001}
+    assert traces == {"call": Decimal(1_000_002 * 10**13),
+                      "reward": Decimal(2 * 10**18)}
+    [far] = gen_blocks(spark, 200_000_000, 200_000_000, 1).select(
+        "total_difficulty"
+    ).collect()
+    assert far[0] == Decimal(200_000_000**2 * 500)
+
+
+def test_marker_written_after_concurrent_children_and_hook(spark, tmp_path, monkeypatch):
+    """The three child writes and the on_batch hook run on threads that
+    inherit the caller's local properties; the block marker is written only
+    after every one of them has returned."""
+    import threading
+    import time
+
+    from graphsense_ethereum_etl_spark.streaming import incremental
+
+    spans = []  # (name, start, end, thread)
+    write_table = incremental._write_table
+
+    def timed_write(spark_, sink_root, table, *a):
+        t0 = time.perf_counter()
+        out = write_table(spark_, sink_root, table, *a)
+        spans.append((table, t0, time.perf_counter(), threading.get_ident()))
+        return out
+
+    monkeypatch.setattr(incremental, "_write_table", timed_write)
+    seen = []
+
+    def hook(s, raw, lo, hi):
+        t0 = time.perf_counter()
+        seen.append(s.sparkContext.getLocalProperty("ingest.test.tag"))
+        time.sleep(0.5)  # ends after the child writes have started
+        spans.append(("hook", t0, time.perf_counter(), threading.get_ident()))
+
+    sc = spark.sparkContext
+    sc.setLocalProperty("ingest.test.tag", "batch")
+    try:
+        run_incremental(
+            spark, source, str(tmp_path / "sink"), head=9, batch_size=10,
+            bucket_size=10, on_batch=hook,
+        )
+    finally:
+        sc.setLocalProperty("ingest.test.tag", None)
+    assert seen == ["batch"]
+    by_name = {name: (t0, t1, tid) for name, t0, t1, tid in spans}
+    assert sorted(by_name) == ["block", "hook", "log", "trace", "transaction"]
+    marker_start, _, marker_tid = by_name.pop("block")
+    assert marker_tid == threading.get_ident()
+    assert all(t1 <= marker_start for _, t1, _ in by_name.values())
+    assert all(tid != marker_tid for _, _, tid in by_name.values())
+
+
+def test_failed_child_write_leaves_marker_and_resume_replays(spark, tmp_path):
+    """A child write that fails while its siblings run leaves the block
+    marker unwritten; the resume replays the whole batch."""
+    from pyspark.sql import functions as F
+
+    def poisoned(spark_, lo, hi):
+        raw = source(spark_, lo, hi)
+        if lo >= 10:
+            raw["traces"] = raw["traces"].withColumn(
+                "error", F.expr("CAST(raise_error('poisoned trace write') AS STRING)")
+            )
+        return raw
+
+    root = str(tmp_path / "sink")
+    with pytest.raises(Exception, match="poisoned trace write"):
+        run_incremental(spark, poisoned, root, head=19, batch_size=10, bucket_size=10)
+    assert latest_ingested_block(spark, f"{root}/block") == 9
+    stats = run_incremental(spark, source, root, head=19, batch_size=10, bucket_size=10)
+    assert stats.blocks == 10  # only the failed batch re-ran
+    ref = str(tmp_path / "ref")
+    run_incremental(spark, source, ref, head=19, batch_size=10, bucket_size=10)
+    assert _table_counts(spark, root) == _table_counts(spark, ref)
+
+
 def test_bucket_rollup_maintenance(spark, tmp_path_factory):
     """Incremental rollup == full recompute after batches, a replay, and a
     reorg applied to both tables."""

@@ -570,3 +570,38 @@ def test_version_asof_timestamp_boundaries(spark, tmp_path):
             .collect()[0][0]
             == 9
         ), t
+
+
+def _one_batch_catalog(spark, tmp_path) -> SnapshotCatalog:
+    root = str(tmp_path / "sink")
+    run_incremental(
+        spark, source, root, head=9, batch_size=10, bucket_size=10,
+        sink_format="versioned",
+    )
+    return SnapshotCatalog(spark, root)
+
+
+def test_heights_asof_timestamps_empty_list(spark, tmp_path):
+    """No probes resolve to no heights (an aggregate with no columns used
+    to raise)."""
+    assert _one_batch_catalog(spark, tmp_path).heights_asof_timestamps([]) == {}
+
+
+def test_heights_asof_timestamps_repeated_probes(spark, tmp_path, monkeypatch):
+    """A repeated timestamp is resolved once: one aggregate column per
+    distinct probe, in first-seen order."""
+    cat = _one_batch_catalog(spark, tmp_path)
+    DataFrame = type(spark.range(0))
+    widths = []
+    agg = DataFrame.agg
+
+    def counting_agg(self, *exprs):
+        widths.append(len(exprs))
+        return agg(self, *exprs)
+
+    monkeypatch.setattr(DataFrame, "agg", counting_agg)
+    t0 = 1_600_000_000  # gen_chain: block n is stamped t0 + 12 n
+    got = cat.heights_asof_timestamps([t0 + 60, t0, t0 + 60, t0 + 61, t0])
+    assert got == {t0 + 60: 5, t0: 0, t0 + 61: 5}
+    assert list(got) == [t0 + 60, t0, t0 + 61]
+    assert widths == [3]

@@ -401,6 +401,61 @@ def test_rpc_chain_source_through_run_incremental(spark, tmp_path):
     assert tx.filter("receipt_gas_used IS NOT NULL").count() == n_txs
 
 
+def test_rpc_chain_batch_fetched_once_and_released(spark, tmp_path):
+    """One fetch per batch: every (method, block) answer is requested once
+    however many writes and hooks read the batch, and the persisted fetch
+    is released when the batch returns — also after an injected crash."""
+    from collections import Counter
+
+    from graphsense_ethereum_etl_spark.sources.rpc import (
+        JsonRpcTransport,
+        rpc_chain_source,
+    )
+    from graphsense_ethereum_etl_spark.streaming.incremental import run_incremental
+
+    log = str(tmp_path / "calls.log")
+    node = _make_fixture_node_post()
+
+    def post(body):  # runs in the Python workers: count through a file
+        import json
+
+        lines = "".join(
+            f"{c['method']} {int(c['params'][0], 16)}\n" for c in json.loads(body)
+        )
+        with open(log, "a") as fh:
+            fh.write(lines)
+        return node(body)
+
+    jrdds = spark.sparkContext._jsc.getPersistentRDDs
+
+    def persisted():
+        return set(jrdds().keySet().toArray())
+
+    before = persisted()
+    source = rpc_chain_source(
+        JsonRpcTransport("http://node:8545", post=post), rpc_batch_size=5
+    )
+    hook_txs = []
+    root = str(tmp_path / "chain")
+    run_incremental(
+        spark, source, root, head=19, batch_size=10, bucket_size=10,
+        on_batch=lambda s, raw, lo, hi: hook_txs.append(raw["transactions"].count()),
+    )
+    with open(log) as fh:
+        calls = Counter(fh.read().splitlines())
+    methods = ("eth_getBlockByNumber", "eth_getBlockReceipts", "trace_block")
+    assert calls == Counter(f"{m} {b}" for m in methods for b in range(20))
+    assert hook_txs == [sum(b % 4 for b in range(10)), sum(b % 4 for b in range(10, 20))]
+    assert persisted() - before == set()
+
+    with pytest.raises(RuntimeError, match="injected crash"):
+        run_incremental(
+            spark, source, root, head=29, batch_size=10, bucket_size=10,
+            fail_after_tables=1,
+        )
+    assert persisted() - before == set()
+
+
 def test_ethrpc_python_datasource(spark):
     """Spark 4 Python Data Source packaging of the RPC fetchers:
     spark.read.format('ethrpc') plans one partition per RPC batch and

@@ -41,7 +41,7 @@ def test_canonical_url_edge_cases(spark):
 
 
 def _py_bpe_reference(rows, merges):
-    """Pure-Python BPE mirroring bpe_token_counts' documented semantics:
+    r"""Pure-Python BPE mirroring bpe_token_counts' documented semantics:
     \x1f stripped from raw text, ASCII-\s word split (Java's default
     class), rules learned on the >= 2-char word vocabulary by
     (cnt desc, x, y) argmax, LEFT-TO-RIGHT NON-OVERLAPPING application,
@@ -104,7 +104,7 @@ def _py_bpe_reference(rows, merges):
 
 
 def test_bpe_token_counts_property_vs_python(spark):
-    """r12 VERDICT #8 + ADVICE #3: bpe_token_counts at merges 0-8 vs the
+    r"""r12 VERDICT #8 + ADVICE #3: bpe_token_counts at merges 0-8 vs the
     pure-Python reference on randomized corpora whose alphabet includes
     the frame byte \x1f (must be stripped, never collide with the
     separator framing), U+2028 (Java bare '.' skips it — the (?s)
